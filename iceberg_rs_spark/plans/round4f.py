@@ -630,9 +630,9 @@ def table_partition_drop_metadata_only(spark: SparkSession, sf_dir: str) -> Data
     """Partition-aligned DELETE as a pure metadata operation: dropping
     a whole day from a day-partitioned table edits the manifest — no
     data file is read or rewritten (sources/icelake.py
-    `_entry_fully_matches`: per-file column stats prove every row
-    matches the predicate, so the file is dropped from the snapshot
-    outright). At 100 TB this is the retention-enforcement path —
+    `_file_outcomes`: per-file column stats and partition values prove
+    the predicate is TRUE on every row, so the file is dropped from the
+    snapshot outright). At 100 TB this is the retention-enforcement path —
     cost proportional to metadata, not to the dropped data.
 
     The result pins the behavior three ways: surviving per-day counts

@@ -547,7 +547,11 @@ def table_zorder_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries filter on two independent dimensions."""
     import tempfile
 
-    from iceberg_rs_spark.sources.icelake import Catalog, _split_by_predicate
+    from iceberg_rs_spark.sources.icelake import (
+        Catalog,
+        _bind_predicate,
+        _split_by_predicate,
+    )
 
     ev = load_table(spark, sf_dir, "events")
     catalog = Catalog(spark, tempfile.mkdtemp(prefix="icelake_zorder_"))
@@ -562,7 +566,8 @@ def table_zorder_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     where = "user_id >= 4 AND user_id <= 8 AND value >= 50"
     entries = t._current_entries(t.metadata)
     if len(entries) > 1:
-        kept, _ = _split_by_predicate(entries, where, t.metadata, t)
+        pred = _bind_predicate(spark, t.metadata, where)
+        kept, _ = _split_by_predicate(entries, pred)
         assert len(kept) < len(entries), "z-order rewrite produced no pruning"
     return (
         t.scan(where=where)

@@ -64,10 +64,12 @@ class TestLifecycle:
 
     @staticmethod
     def _pruned(t, where):
-        from iceberg_rs_spark.sources.icelake import _split_by_predicate
+        from iceberg_rs_spark.sources.icelake import _bind_predicate, _split_by_predicate
 
         md = t.metadata
-        return _split_by_predicate(t._current_entries(md), where, md, t)
+        return _split_by_predicate(
+            t._current_entries(md), _bind_predicate(t.spark, md, where)
+        )
 
     def test_append_overwrite_delete_replace_operations(self, catalog, events_df):
         """Snapshot summary.operation matches the commit kind — the
@@ -304,12 +306,14 @@ class TestPruning:
         # several appends → several files, each covering the full range,
         # then compact: still one file; use repartition writes instead
         t.append(events_df.repartition(8))
-        from iceberg_rs_spark.sources.icelake import _split_by_predicate
+        from iceberg_rs_spark.sources.icelake import _bind_predicate, _split_by_predicate
 
         md = t.metadata
         entries = t._current_entries(md)
         # equality on a single user prunes to files whose range covers it
-        may, no = _split_by_predicate(entries, "user_id = 3", md, t)
+        may, no = _split_by_predicate(
+            entries, _bind_predicate(t.spark, md, "user_id = 3")
+        )
         assert len(may) >= 1
         got = t.scan(where="user_id = 3").count()
         assert got == events_df.where("user_id = 3").count()
@@ -320,7 +324,7 @@ class TestPruning:
         so bucket pruning must cast the literal to the SOURCE column
         type. Before the fix, `event_id = 0` on a bucket[4](event_id)
         table pruned the matching file and silently returned 0 rows."""
-        from iceberg_rs_spark.sources.icelake import _split_by_predicate
+        from iceberg_rs_spark.sources.icelake import _bind_predicate, _split_by_predicate
 
         base = events_df.limit(100)
         t = catalog.create_table(
@@ -332,7 +336,7 @@ class TestPruning:
             assert t.scan(where=f"event_id = {i}").count() == 1
         md = t.metadata
         may, no = _split_by_predicate(
-            t._current_entries(md), f"event_id = {ids[0]}", md, t
+            t._current_entries(md), _bind_predicate(t.spark, md, f"event_id = {ids[0]}")
         )
         assert len(no) > 0  # it actually pruned, not conservative-kept
 
@@ -440,22 +444,43 @@ class TestPruning:
         base.unpersist()
 
     def test_scan_where_exactness_with_unparseable_predicate(self, catalog, events_df):
+        """A ``where`` the evaluator cannot reason about (LIKE) prunes
+        nothing and stays exact; OR is no longer one of those — it
+        prunes on an identity-partitioned table and stays exact."""
+        from iceberg_rs_spark.sources.icelake import _bind_predicate, _split_by_predicate
+
         t = catalog.create_table("db.exact", events_df.schema, partition_by=[("ts", "day")])
         t.append(events_df)
-        # OR predicates aren't pruned, but results stay exact
-        got = t.scan(where="event_type = 'click' OR event_type = 'view'").count()
+        or_where = "event_type = 'click' OR event_type = 'view'"
         exp = events_df.where("event_type IN ('click','view')").count()
-        assert got == exp
+        assert t.scan(where=or_where).count() == exp
+        like = "event_type LIKE 'cl%'"
+        assert t.scan(where=like).count() == events_df.where(like).count()
+        md = t.metadata
+        _, no = _split_by_predicate(
+            t._current_entries(md),
+            _bind_predicate(t.spark, md, like),
+        )
+        assert no == []
+
+        ti = catalog.create_table(
+            "db.exact_or", events_df.schema, partition_by=[("event_type", "identity")]
+        )
+        ti.append(events_df)
+        md = ti.metadata
+        may, no = _split_by_predicate(
+            ti._current_entries(md), _bind_predicate(ti.spark, md, or_where)
+        )
+        assert {e.partition["event_type"] for e in may} == {"click", "view"}
+        assert len(no) > 0
+        assert ti.scan(where=or_where).count() == exp
 
     def test_in_list_pruning_actually_prunes(self, catalog, events_df):
         """IN-list predicates (the dim-driven scan shape) participate
         in pruning: identity partitions keep only the listed values'
         files, bucket partitions keep only the listed values' buckets,
-        and NOT IN falls through to conservative no-pruning."""
-        from iceberg_rs_spark.sources.icelake import (
-            _parse_conjuncts,
-            _split_by_predicate,
-        )
+        and NOT IN stays exact."""
+        from iceberg_rs_spark.sources.icelake import _bind_predicate, _split_by_predicate
 
         base = events_df.limit(120)
         t = catalog.create_table(
@@ -464,7 +489,8 @@ class TestPruning:
         t.append(base)
         md = t.metadata
         may, no = _split_by_predicate(
-            t._current_entries(md), "event_type IN ('click', 'view')", md, t
+            t._current_entries(md),
+            _bind_predicate(t.spark, md, "event_type IN ('click', 'view')"),
         )
         assert len(no) > 0  # other event types' files pruned
         got = t.scan(where="event_type IN ('click', 'view')").count()
@@ -476,14 +502,26 @@ class TestPruning:
         tb.append(base)
         mdb = tb.metadata
         may_b, no_b = _split_by_predicate(
-            tb._current_entries(mdb), "event_id IN (3, 7)", mdb, tb
+            tb._current_entries(mdb), _bind_predicate(tb.spark, mdb, "event_id IN (3, 7)")
         )
         assert len(no_b) > 0  # at most 2 of 8 buckets survive
         assert tb.scan(where="event_id IN (3, 7)").count() == base.where(
             "event_id IN (3, 7)"
         ).count()
-        # NOT IN is deliberately unparseable → no pruning, still exact
-        assert _parse_conjuncts("event_id NOT IN (3, 7)") is None
+        # NOT IN (and NOT IN holding NULL, which is never TRUE): scan
+        # and delete stay exact in both delete modes
+        for where in ("event_id NOT IN (3, 7)", "event_id NOT IN (3, NULL)"):
+            exp = base.where(where).count()
+            assert tb.scan(where=where).count() == exp
+            for mode in ("copy-on-write", "merge-on-read"):
+                td = catalog.create_table(
+                    f"db.notin_{mode[0]}_{len(where)}",
+                    base.schema,
+                    partition_by=[("event_id", "bucket[8]")],
+                )
+                td.append(base)
+                assert td.delete(where, mode=mode) == exp
+                assert td.scan().count() == base.count() - exp
 
     def test_truncate_in_list_pruning_actually_prunes(self, catalog, events_df):
         """truncate[W] is monotonic, so an IN list prunes via per-value
@@ -491,7 +529,7 @@ class TestPruning:
         literal's truncation survive — string truncate on a text column
         and width-truncate on an integer column both actually PRUNE
         (non-empty `no` set), and the scan stays exact."""
-        from iceberg_rs_spark.sources.icelake import _split_by_predicate
+        from iceberg_rs_spark.sources.icelake import _bind_predicate, _split_by_predicate
 
         base = events_df.limit(120)
         tt = catalog.create_table(
@@ -502,7 +540,8 @@ class TestPruning:
         tt.append(base)
         md = tt.metadata
         may, no = _split_by_predicate(
-            tt._current_entries(md), "event_type IN ('click', 'view')", md, tt
+            tt._current_entries(md),
+            _bind_predicate(tt.spark, md, "event_type IN ('click', 'view')"),
         )
         assert len(no) > 0  # prefixes other than 'cl'/'vi' pruned
         assert tt.scan(where="event_type IN ('click', 'view')").count() == (
@@ -517,7 +556,8 @@ class TestPruning:
         ti.append(base)
         mdi = ti.metadata
         may_i, no_i = _split_by_predicate(
-            ti._current_entries(mdi), "event_id IN (3, 7, 103)", mdi, ti
+            ti._current_entries(mdi),
+            _bind_predicate(ti.spark, mdi, "event_id IN (3, 7, 103)"),
         )
         assert len(no_i) > 0  # only width-50 blocks 0 and 100 survive
         assert ti.scan(where="event_id IN (3, 7, 103)").count() == (
@@ -561,11 +601,12 @@ class TestCorrectnessFixes:
         rng = t.scan(where="ts >= TIMESTAMP '2024-01-03 00:00:00'")
         assert sorted(r["id"] for r in rng.collect()) == [2, 3, 4]
         # and the pruning actually pruned (not just conservative-kept)
-        from iceberg_rs_spark.sources.icelake import _split_by_predicate
+        from iceberg_rs_spark.sources.icelake import _bind_predicate, _split_by_predicate
 
         md = t.metadata
         may, no = _split_by_predicate(
-            t._current_entries(md), "ts = TIMESTAMP '2024-01-03 12:30:00'", md, t
+            t._current_entries(md),
+            _bind_predicate(t.spark, md, "ts = TIMESTAMP '2024-01-03 12:30:00'"),
         )
         assert len(no) > 0 and len(may) < len(may) + len(no)
 
@@ -1987,10 +2028,12 @@ class TestClusteredRewrite:
 
     @staticmethod
     def _pruned(t, where):
-        from iceberg_rs_spark.sources.icelake import _split_by_predicate
+        from iceberg_rs_spark.sources.icelake import _bind_predicate, _split_by_predicate
 
         md = t.metadata
-        return _split_by_predicate(t._current_entries(md), where, md, t)
+        return _split_by_predicate(
+            t._current_entries(md), _bind_predicate(t.spark, md, where)
+        )
 
     def _fixture(self, catalog, events_df, name, **compact_kw):
         t = catalog.create_table(f"db.{name}", events_df.schema)
@@ -2022,7 +2065,10 @@ class TestClusteredRewrite:
         total = len(t._current_entries(t.metadata))
         assert total >= 16, "fixture must produce enough files to measure pruning"
         kept_u, _ = self._pruned(t, "user_id = 7")
-        kept_v, _ = self._pruned(t, "value >= 90")
+        # `value <= 10`, not `value >= 90`: a double file's max leaves
+        # NaN out and Spark orders NaN above every number, so only the
+        # lower tail of a float column can prune.
+        kept_v, _ = self._pruned(t, "value <= 10")
         # Z-curve: a point predicate on either dimension touches only
         # the files whose envelope covers that bucket range.
         assert len(kept_u) <= total / 2
@@ -2033,7 +2079,7 @@ class TestClusteredRewrite:
             catalog, events_df, "s1", cluster_by=["value", "user_id"], strategy="sort"
         )
         total = len(t._current_entries(t.metadata))
-        kept_v, _ = self._pruned(t, "value >= 90")
+        kept_v, _ = self._pruned(t, "value <= 10")  # see the z-order test
         kept_u, _ = self._pruned(t, "user_id = 7")
         assert len(kept_v) <= total / 2  # leading column clusters tightly
         assert len(kept_u) >= total * 0.9  # trailing column does not prune

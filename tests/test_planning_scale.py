@@ -1,7 +1,8 @@
 """Scan-planning cost at metadata scale (VERDICT r1 item 7).
 
 icelake plans scans on the driver: one JSON manifest per snapshot,
-pruned in a Python loop (`_split_by_predicate`). This file *measures*
+pruned in a Python loop (`_split_by_predicate`, after Spark binds the
+predicate once with `_bind_predicate`). This file *measures*
 that ceiling so it is a documented number, not a guess:
 
 - planning is O(files) with a per-entry cost of ~5-20 µs, so a
@@ -20,7 +21,11 @@ from __future__ import annotations
 import time
 
 from iceberg_rs_spark.model import TableMetadata
-from iceberg_rs_spark.sources.icelake import DataFileEntry, _split_by_predicate
+from iceberg_rs_spark.sources.icelake import (
+    DataFileEntry,
+    _bind_predicate,
+    _split_by_predicate,
+)
 
 N_FILES = 20_000
 
@@ -113,14 +118,10 @@ class TestShardedManifest:
 
     def test_distributed_prune_matches_driver_prune(self, spark, tmp_path, sf_dir):
         """The executor-side pruning path must select exactly the same
-        file set as the driver-side loop (same _entry_survives logic,
-        two execution venues)."""
+        file set as the driver-side loop (same _file_outcomes check on
+        one bound predicate, two execution venues)."""
         from iceberg_rs_spark.sources.fixtures import load_table
-        from iceberg_rs_spark.sources.icelake import (
-            Catalog,
-            _distributed_prune,
-            _split_by_predicate,
-        )
+        from iceberg_rs_spark.sources.icelake import Catalog, _distributed_prune
 
         events = load_table(spark, sf_dir, "events")
         catalog = Catalog(spark, str(tmp_path / "wh2"))
@@ -135,9 +136,10 @@ class TestShardedManifest:
         snap = md.snapshot_by_id(md.current_snapshot_id)
         parts = t._manifest_parts(snap)
         where = "ts >= TIMESTAMP '2024-01-05 00:00:00'"
-        dist = _distributed_prune(spark, parts, where, md)
+        pred = _bind_predicate(spark, md, where)
+        dist = _distributed_prune(spark, parts, pred)
         assert dist is not None
-        drv, _ = _split_by_predicate(t._read_manifest(snap), where, md, t)
+        drv, _ = _split_by_predicate(t._read_manifest(snap), pred)
         assert sorted(e.path for e in dist) == sorted(e.path for e in drv)
         assert 0 < len(dist) < snap_file_count(t)
 
@@ -229,7 +231,8 @@ class TestPlanningScale:
         md = _metadata_stub(spark)
         t0 = time.perf_counter()
         may, no = _split_by_predicate(
-            entries, "event_id >= 1000000 AND event_id < 2000000", md, table=None
+            entries,
+            _bind_predicate(spark, md, "event_id >= 1000000 AND event_id < 2000000"),
         )
         elapsed = time.perf_counter() - t0
         # selectivity: 1000 files of 20k
@@ -245,10 +248,14 @@ class TestPlanningScale:
         over (test_scan_uses_distributed_prune_above_shard_threshold)."""
         entries = _synthetic_entries(100_000)
         md = _metadata_stub(spark)
-        _split_by_predicate(entries[:2000], "event_id = 1", md, table=None)  # warm
+        _split_by_predicate(
+            entries[:2000],
+            _bind_predicate(spark, md, "event_id = 1"),
+        )  # warm
         t0 = time.perf_counter()
         may, no = _split_by_predicate(
-            entries, "event_id >= 1000000 AND event_id < 2000000", md, table=None
+            entries,
+            _bind_predicate(spark, md, "event_id >= 1000000 AND event_id < 2000000"),
         )
         elapsed = time.perf_counter() - t0
         assert len(may) == 1000 and len(no) == 99_000
@@ -262,7 +269,7 @@ class TestPlanningScale:
 
         def plan(entries):
             t0 = time.perf_counter()
-            _split_by_predicate(entries, "event_id = 42", md, table=None)
+            _split_by_predicate(entries, _bind_predicate(spark, md, "event_id = 42"))
             return time.perf_counter() - t0
 
         plan(small)  # warm
@@ -278,10 +285,14 @@ class TestInListPlanning:
         under 1.5 s, pruning to exactly the admitting files."""
         entries = _synthetic_entries(100_000)
         md = _metadata_stub(spark)
-        _split_by_predicate(entries[:2000], "event_id IN (1, 2)", md, table=None)
+        _split_by_predicate(
+            entries[:2000],
+            _bind_predicate(spark, md, "event_id IN (1, 2)"),
+        )
         t0 = time.perf_counter()
         may, no = _split_by_predicate(
-            entries, "event_id IN (500, 1500500, 99999999)", md, table=None
+            entries,
+            _bind_predicate(spark, md, "event_id IN (500, 1500500, 99999999)"),
         )
         elapsed = time.perf_counter() - t0
         # each in-range value admits exactly one disjoint-range file
