@@ -52,64 +52,55 @@ PRIORITY: list[str] = [
     # row first), then everything else — certified names ordered
     # oldest-last-green-row first so the driver window cyclically
     # refreshes stale certifications (VERDICT r12 ask #1).
-    "pipeline_bpe_pair_merges",
-    "pipeline_dataset_card_by_source",
-    "pipeline_doc_chunking",
-    "pipeline_doc_feature_vector",
-    "pipeline_importance_resampling",
-    "pipeline_padding_waste_report",
-    "pipeline_span_corruption",
-    "sim_hybrid_rrf_fusion",
-    "sim_mmr_rerank",
-    "sim_ranking_metrics_ndcg",
-    "sim_threshold_sweep",
-    "text_js_divergence_lang",
-    "text_rake_phrases",
-    "text_term_burstiness",
-    "text_tfidf_doc_similarity",
-    "text_vocab_growth_heaps",
-    "sub_quantified_all_any",
-    "text_language_id",
-    "text_stats_profile",
-    "text_token_counts_by_lang",
-    "agg_percentiles_regression",
-    "pipeline_sequence_packing",
-    "pipeline_train_test_split",
-    "prepare_training_corpus",
-    "agg_weighted_percentiles",
-    "events_concurrent_peak",
-    "events_powerlaw_rank_fit",
-    "events_revenue_pareto_deciles",
-    "pipeline_curriculum_stages",
-    "text_repetition_signals",
-    "ts_gapfill_interpolate",
-    "dedup_component_size_profile",
-    "dedup_connected_components",
-    "dedup_exact_content_hash",
-    "dedup_minhash_lsh_pairs",
-    "dedup_ngram_jaccard_matrix",
-    "dedup_simhash_fingerprints",
-    "dedup_simhash_near_pairs",
-    "pipeline_dedup_purge",
-    "pipeline_training_data",
-    "pipeline_decontaminate_ngrams",
-    "pipeline_ngram_lm_quality",
-    "sim_ann_agreement",
-    "sim_ann_agreement_ivf",
-    "sim_ann_agreement_pq",
-    "sim_embedding_high_pairs",
-    "sim_knn_classify",
-    "sim_pq_topk",
-    "sim_quantized_grouped_topk",
-    "sim_quantized_topk",
+    "table_snapshots_metadata",
+    "table_time_travel",
+    "table_typed_columns_roundtrip",
+    "dedup_lsh_quality_eval",
+    "table_add_files_name_mapping",
+    "table_branch_diff_audit",
+    "table_branch_tag_reads",
+    "table_changelog_scan",
+    "table_incremental_rollup_maintenance",
+    "table_incremental_scan",
+    "table_incremental_scan_compacted",
+    "table_merge_upsert_mor",
+    "table_mor_delete",
+    "table_operation_sequence",
+    "table_partition_drop_metadata_only",
+    "table_partition_evolution_reads",
+    "table_partitions_metadata",
+    "table_rewrite_deletes",
+    "table_rollback_restore",
+    "table_scan_pushdown",
+    "table_schema_evolution_scan",
+    "table_snapshot_ancestry",
+    "table_vacuum_lifecycle_audit",
+    "table_wap_publish",
+    "table_zorder_rewrite",
+    "text_containment_pairs",
     "sim_silhouette_by_label",
     "sim_topk_bruteforce",
     "sim_topk_ivf",
     "sim_topk_lsh",
+    "stream_cdc_upsert_icelake",
+    "stream_dedup_event_ids",
+    "stream_ingest_icelake",
+    "stream_session_windows",
+    "stream_sliding_window",
+    "stream_stateful_user_sessions",
+    "stream_static_enrichment",
+    "stream_stream_abandoned_clicks",
+    "stream_stream_click_purchase",
+    "stream_trending_topk",
+    "stream_tumbling_window",
+    "stream_windowed_distinct_users",
     "text_boilerplate_ngrams",
     "text_tfidf_keywords",
     "text_winnowing_fingerprints",
     "text_zipf_token_curve",
+    "graph_jaccard_link_prediction",
+    "graph_triangle_count",
+    "pipeline_vocab_coverage",
     "ts_autocorrelation_lags",
     "ts_cusum_changepoint",
     "ts_weekday_seasonal_index",
@@ -238,46 +229,8 @@ PRIORITY: list[str] = [
     "q9_product_profit",
     "win_skyline_pareto_frontier",
     "join_asof_tolerance_left",
-    "table_snapshots_metadata",
-    "table_time_travel",
-    "table_typed_columns_roundtrip",
-    "table_vacuum_lifecycle_audit",
-    "table_wap_publish",
-    "table_zorder_rewrite",
-    "dedup_lsh_quality_eval",
-    "text_containment_pairs",
     "pipeline_lsh_scurve_planner",
     "sim_rank_correlation_kendall",
-    "table_add_files_name_mapping",
-    "table_branch_diff_audit",
-    "table_branch_tag_reads",
-    "table_changelog_scan",
-    "table_incremental_rollup_maintenance",
-    "table_incremental_scan",
-    "table_incremental_scan_compacted",
-    "table_merge_upsert_mor",
-    "table_mor_delete",
-    "table_operation_sequence",
-    "table_partition_drop_metadata_only",
-    "table_partition_evolution_reads",
-    "table_partitions_metadata",
-    "table_rewrite_deletes",
-    "table_rollback_restore",
-    "table_scan_pushdown",
-    "table_schema_evolution_scan",
-    "table_snapshot_ancestry",
-    "stream_dedup_event_ids",
-    "stream_session_windows",
-    "stream_sliding_window",
-    "stream_static_enrichment",
-    "stream_stream_click_purchase",
-    "stream_trending_topk",
-    "stream_tumbling_window",
-    "stream_windowed_distinct_users",
-    "stream_cdc_upsert_icelake",
-    "stream_ingest_icelake",
-    "stream_stateful_user_sessions",
-    "stream_stream_abandoned_clicks",
     "events_funnel_conversion",
     "events_cohort_retention",
     "text_pii_redaction",
@@ -297,15 +250,12 @@ PRIORITY: list[str] = [
     "events_rfm_segments",
     "events_anomaly_daily_zscore",
     "events_sessionization_distributed",
-    "graph_jaccard_link_prediction",
-    "graph_triangle_count",
     "sim_centroid_per_label",
     "pipeline_mixture_weights",
     "join_pit_dimension",
     "graph_pagerank_trade",
     "quality_expectations",
     "agg_heavy_hitters_mg",
-    "pipeline_vocab_coverage",
     "dedup_url_canonical",
     "fn_string_distance",
     "ts_downsample_m4",
@@ -346,6 +296,56 @@ PRIORITY: list[str] = [
     "ts_seasonal_naive_backtest",
     "ts_anomaly_robust_mad",
     "ts_ohlc_bars",
+    "pipeline_bpe_pair_merges",
+    "pipeline_dataset_card_by_source",
+    "pipeline_doc_chunking",
+    "pipeline_doc_feature_vector",
+    "pipeline_importance_resampling",
+    "pipeline_padding_waste_report",
+    "pipeline_span_corruption",
+    "sim_hybrid_rrf_fusion",
+    "sim_mmr_rerank",
+    "sim_ranking_metrics_ndcg",
+    "sim_threshold_sweep",
+    "text_js_divergence_lang",
+    "text_rake_phrases",
+    "text_term_burstiness",
+    "text_tfidf_doc_similarity",
+    "text_vocab_growth_heaps",
+    "sub_quantified_all_any",
+    "text_language_id",
+    "text_stats_profile",
+    "text_token_counts_by_lang",
+    "agg_percentiles_regression",
+    "pipeline_sequence_packing",
+    "pipeline_train_test_split",
+    "prepare_training_corpus",
+    "agg_weighted_percentiles",
+    "events_concurrent_peak",
+    "events_powerlaw_rank_fit",
+    "events_revenue_pareto_deciles",
+    "pipeline_curriculum_stages",
+    "text_repetition_signals",
+    "ts_gapfill_interpolate",
+    "dedup_component_size_profile",
+    "dedup_connected_components",
+    "dedup_exact_content_hash",
+    "dedup_minhash_lsh_pairs",
+    "dedup_ngram_jaccard_matrix",
+    "dedup_simhash_fingerprints",
+    "dedup_simhash_near_pairs",
+    "pipeline_dedup_purge",
+    "pipeline_training_data",
+    "pipeline_decontaminate_ngrams",
+    "pipeline_ngram_lm_quality",
+    "sim_ann_agreement",
+    "sim_ann_agreement_ivf",
+    "sim_ann_agreement_pq",
+    "sim_embedding_high_pairs",
+    "sim_knn_classify",
+    "sim_pq_topk",
+    "sim_quantized_grouped_topk",
+    "sim_quantized_topk",
     "agg_approx_sketches",
     "fn_hash_engine_specific",
 ]
