@@ -1334,35 +1334,14 @@ class Table:
                 files.append(p)
         if not files:
             raise ValueError(f"no parquet files under {paths}")
-        # canonical-name aliases per field id (current schema names)
-        schema = md.current_schema()
-        alias_by_name: dict[str, str] = {}
-        for m in mapping:
-            fld = schema.field_by_id(m.field_id)
-            if fld is None:
-                continue
-            for n in m.names:
-                alias_by_name[n] = fld.name
         new_entries = []
         for fp in files:
             pf = pq.ParquetFile(fp)
-            raw_stats = _file_stats(pf)
-            # Remap stats keys to canonical names so min/max pruning on
-            # current-schema predicates still applies to raw files. If
-            # two raw columns map to the SAME canonical name (an alias
-            # plus the canonical name itself, or two aliases of one
-            # field), last-wins would record a wrong interval and
-            # stats pruning could incorrectly DROP the file — fall
-            # back to no stats for that column (conservative keep).
-            stats: dict = {}
-            colliding: set[str] = set()
-            for k, v in raw_stats.items():
-                canon = alias_by_name.get(k, k)
-                if canon in stats:
-                    colliding.add(canon)
-                stats[canon] = v
-            for canon in colliding:
-                stats[canon] = None
+            # Stats stay under the file's own column names, with a key
+            # for every top-level column (None: no stats), so pruning
+            # finds a field's column through the mapping the way the
+            # reader does (`_column_stats`).
+            stats = dict.fromkeys(pf.schema_arrow.names) | _file_stats(pf)
             new_entries.append(
                 DataFileEntry(
                     path=fp,
@@ -1663,18 +1642,22 @@ class Table:
             if need_seq:
                 df = df.withColumn(_SEQ, F.lit(None).cast("long"))
             return df
-        groups: dict[tuple[int, str, int], list[str]] = {}
+        # add_files files are grouped by their column names too: Spark
+        # reads one file's footer for a group's schema, so a group of
+        # files that spell a field differently would read it as NULL.
+        groups: dict[tuple[int, str, int, tuple], list[str]] = {}
         for e in entries:
             groups.setdefault(
                 (
                     e.schema_id,
                     _base_path(e.path, self.location),
                     int(e.sequence_number or 0),
+                    tuple(sorted(e.stats)) if e.schema_id == RAW_SCHEMA_ID else (),
                 ),
                 [],
             ).append(e.path)
         parts = []
-        for (sid, base, seq), paths in sorted(groups.items()):
+        for (sid, base, seq, _cols), paths in sorted(groups.items()):
             if sid == RAW_SCHEMA_ID:
                 df = self._read_raw_via_name_mapping(md, paths, target, pos_cols)
             else:
@@ -3085,7 +3068,7 @@ def _monotone(op: str, pv, tv) -> int:
 def _cmp_outcomes(node: tuple, e: DataFileEntry) -> int:
     _, op, keys, domain, v, parts = node
     out = _ALL
-    st = e.stats.get(keys.get(e.schema_id))
+    st = _column_stats(keys, e)
     if st is not None:
         nulls = st.get("nulls")
         if nulls is not None and nulls >= e.record_count:
@@ -3118,7 +3101,7 @@ def _cmp_outcomes(node: tuple, e: DataFileEntry) -> int:
 
 def _null_outcomes(node: tuple, e: DataFileEntry) -> int:
     _, keys, parts = node
-    st = e.stats.get(keys.get(e.schema_id))
+    st = _column_stats(keys, e)
     nulls = None if st is None else st.get("nulls")
     if nulls is None:
         out = _T | _F
@@ -3182,8 +3165,9 @@ def _bucket_of_literal(spark: SparkSession, n: int, v, spark_type) -> int | None
     long column it compares against hashes 8), so the literal is cast
     to the column type before bucketing — without the cast, an integer
     equality literal lands in the wrong bucket and pruning silently
-    drops the matching file. Timestamps arrive as session-local text,
-    which the cast reads the way the column's values were written."""
+    drops the matching file. Timestamps arrive as text the cast reads
+    without the session zone: wall-clock for timestamp_ntz, UTC with
+    its offset for timestamp."""
     key = (n, str(spark_type), str(v))
     if key not in _bucket_cache:
         try:
@@ -3200,12 +3184,20 @@ def _bucket_of_literal(spark: SparkSession, n: int, v, spark_type) -> int | None
 def _stat_keys(md: TableMetadata, fid: int) -> dict:
     """schema id → the name field ``fid`` has in that schema: a file keys
     its stats by the names it was written with. add_files entries
-    (RAW_SCHEMA_ID) use the name mapping, when it names one column."""
+    (RAW_SCHEMA_ID) get the field's mapped names, in mapping order."""
     keys = {s.schema_id: f.name for s in md.schemas if (f := s.field_by_id(fid))}
     for m in _load_name_mapping(md) or ():
-        if m.field_id == fid and len(m.names) == 1:
-            keys[RAW_SCHEMA_ID] = m.names[0]
+        if m.field_id == fid:
+            keys[RAW_SCHEMA_ID] = m.names
     return keys
+
+
+def _column_stats(keys: dict, e: DataFileEntry) -> dict | None:
+    """One column's stats in one file. An add_files file holds the first
+    mapped name it has, as `_read_raw_via_name_mapping` reads it."""
+    if e.schema_id != RAW_SCHEMA_ID:
+        return e.stats.get(keys.get(e.schema_id))
+    return e.stats.get(next((n for n in keys.get(RAW_SCHEMA_ID, ()) if n in e.stats), None))
 
 
 def _bind_predicate(
@@ -3287,13 +3279,18 @@ def _bind_predicate(
         parts = []
         for sid, pf, fld in fields:
             kind, param = pf.transform.kind, pf.transform.param
-            if kind == "identity":
-                parts.append((sid, pf.name, "identity", domain, key))
-            elif kind == "bucket" and op == "=":
-                text = local.isoformat(sep=" ") if domain in ("ts", "tsz") else local
+            if kind == "bucket" and op == "=":
+                # a timestamp's hash is of its instant: name it in UTC
+                text = f"{v.isoformat(sep=' ')}+00:00" if domain == "tsz" else (
+                    local.isoformat(sep=" ") if domain == "ts" else local
+                )
                 b = _bucket_of_literal(spark, param, text, _spark_type_of(fld))
                 if b is not None:
                     parts.append((sid, pf.name, "bucket", "int", b))
+            elif domain == "tsz":
+                continue  # other transforms ran in the writer's session zone
+            elif kind == "identity":
+                parts.append((sid, pf.name, "identity", domain, key))
             elif kind != "bucket" and domain != "float":
                 tv = _apply_transform_py(pf.transform, local)
                 if tv is not None:

@@ -1078,9 +1078,9 @@ class TestAdviceR2Fixes:
         self, catalog, spark, events_df, tmp_path
     ):
         """A raw file carrying BOTH an alias and the canonical column
-        name yields an unknown (None) stats interval for that column —
-        pruning keeps the file instead of guessing; re-registering the
-        same path is rejected."""
+        name keeps stats under both raw names; reads and pruning both
+        take the first mapped name, so pruning is exact; re-registering
+        the same path is rejected."""
         from iceberg_rs_spark.model import NameMapping
         import iceberg_rs_spark.sources.icelake as lake
 
@@ -1106,11 +1106,14 @@ class TestAdviceR2Fixes:
         ]
         assert raw_entries
         for e in raw_entries:
-            assert e.stats.get("value") is None  # conservative: no interval
-            assert e.stats.get("event_id") is not None  # untouched column keeps stats
-        # stats-pruned scan must still read the raw file (conservative keep)
+            assert e.stats["value"] != e.stats["val"]  # each raw column's own stats
+            assert e.stats.get("event_id") is not None
         hi = t.scan(where="value >= 0").count() + t.scan(where="value < 0").count()
         assert hi == t.to_df().count()
+        values = sorted(r.value for r in t.to_df().collect() if r.value is not None)
+        for x in (values[0], values[len(values) // 2], values[-1]):
+            for where in (f"value <= {x}", f"value > {x}"):
+                assert t.scan(where=where).count() == t.to_df().filter(where).count(), where
         # duplicate registration rejected
         with pytest.raises(ValueError, match="already registered"):
             t.add_files(raw_dir)

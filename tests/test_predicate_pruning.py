@@ -27,7 +27,8 @@ from iceberg_rs_spark.sources import icelake
 
 NAN = float("nan")
 LA = "America/Los_Angeles"  # a session time zone with DST
-SCHEMA = "k string, n long, v double, ts timestamp_ntz"
+SCHEMA = "k string, n long, v double, ts timestamp_ntz, tz timestamp"
+COLS = ("k", "n", "v", "ts", "tz")
 
 
 @pytest.fixture()
@@ -37,7 +38,7 @@ def catalog(spark, tmp_path):
     return Catalog(spark, str(tmp_path / "wh"))
 
 
-def _canon(df, cols=("k", "n", "v", "ts")) -> list[str]:
+def _canon(df, cols=COLS) -> list[str]:
     """Rows as sorted reprs: NaN compares unequal to itself in tuples."""
     return sorted(repr(tuple(r)) for r in df.select(*cols).collect())
 
@@ -97,6 +98,86 @@ class TestRegressions:
         assert t.scan(where="y = 5").count() == 3
         assert t.delete("x = 5") == 0
         assert t.scan().count() == 3
+
+    @staticmethod
+    def _raw_table(catalog, spark, tmp_path, name, mapping, files):
+        """A ``a long, b long`` table whose rows come from pyarrow files
+        ``{file name: {raw column: values}}`` registered with add_files;
+        ``mapping`` is ``{field name: raw names}``."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from iceberg_rs_spark.model import NameMapping
+
+        raw_dir = tmp_path / name
+        raw_dir.mkdir()
+        for fname, cols in files.items():
+            pq.write_table(
+                pa.table({c: pa.array(v, pa.int64()) for c, v in cols.items()}),
+                raw_dir / fname,
+            )
+        t = catalog.create_table(
+            f"db.{name}", spark.createDataFrame([], "a long, b long").schema
+        )
+        sch = t.schema()
+        t.add_files(
+            str(raw_dir),
+            name_mapping=[
+                NameMapping(sch.field_by_name(f).id, names) for f, names in mapping.items()
+            ],
+        )
+        return t
+
+    def test_add_files_two_name_mapping_prunes(self, catalog, spark, tmp_path):
+        """Raw files registered under a (current name, raw name) mapping
+        prune on the raw column's stats."""
+        t = self._raw_table(
+            catalog, spark, tmp_path, "raw_prune",
+            {"a": ("a", "ra"), "b": ("b", "rb")},
+            {"lo.parquet": {"ra": list(range(10)), "rb": [1] * 10},
+             "hi.parquet": {"ra": list(range(100, 110)), "rb": [2] * 10}},
+        )
+        md = t.metadata
+        may, no = icelake._split_by_predicate(
+            t._current_entries(md), icelake._bind_predicate(spark, md, "a < 50 AND b = 1")
+        )
+        assert [e.path.rsplit("/", 1)[1] for e in may] == ["lo.parquet"]
+        assert len(no) == 1
+        assert t.scan(where="a < 50 AND b = 1").count() == 10
+
+    def test_add_files_swapped_names_are_exact(self, catalog, spark, tmp_path):
+        """Field ``a`` reads raw column ``b`` and field ``b`` raw ``a``:
+        each field's stats are its own raw column's, so neither a scan
+        nor the metadata-only delete reads the other field's interval."""
+        mapping = {"a": ("b",), "b": ("a",)}
+        files = {"f.parquet": {"a": list(range(100, 110)), "b": list(range(10))}}
+        for mode in ("copy-on-write", "merge-on-read"):
+            t = self._raw_table(
+                catalog, spark, tmp_path, f"raw_swap_{mode[0]}", mapping, files
+            )
+            assert sorted(r.a for r in t.scan().collect()) == list(range(10))
+            for where, n in {"a < 10": 10, "a >= 100": 0, "b >= 100": 10, "b < 10": 0}.items():
+                assert t.scan(where=where).count() == n, where
+            assert t.delete("a >= 100", mode=mode) == 0
+            assert t.scan().count() == 10
+            assert t.delete("a < 5", mode=mode) == 5
+            assert sorted(r.b for r in t.scan().collect()) == list(range(105, 110))
+
+    def test_add_files_files_spelling_a_field_differently(self, catalog, spark, tmp_path):
+        """One add_files call registering files that use different mapped
+        names for a field: each file reads its own column."""
+        t = self._raw_table(
+            catalog, spark, tmp_path, "raw_mixed",
+            {"a": ("a", "ra"), "b": ("b", "rb")},
+            {"x.parquet": {"a": [1, 2], "b": [10, 20]},
+             "y.parquet": {"ra": [3, 4], "rb": [30, 40]}},
+        )
+        assert sorted(tuple(r) for r in t.scan().collect()) == [
+            (1, 10), (2, 20), (3, 30), (4, 40)
+        ]
+        assert t.scan(where="b > 25").count() == 2
+        assert t.delete("a = 3") == 1
+        assert sorted(r.a for r in t.scan().collect()) == [1, 2, 4]
 
     def test_timestamp_literal_in_session_time_zone(self, catalog, spark, tmp_path):
         """A TIMESTAMP literal means an instant in the session zone:
@@ -198,10 +279,23 @@ LONGS = [-5, 0, 3, 7, 12, 25, 40]
 DOUBLES = [-1.5, -0.0, 0.0, 2.5, 7.0, math.inf, NAN]
 DAY0 = dt.datetime(2024, 3, 9)
 TIMESTAMPS = [DAY0 + dt.timedelta(hours=h) for h in (0, 5, 23, 24, 30, 47, 49, 70)]
+#: instants around Los Angeles' 2024 DST gap (Mar 10, 10:00 UTC) and
+#: fold (Nov 3, 08:00-10:00 UTC)
+INSTANTS = [
+    (t + dt.timedelta(hours=h)).replace(tzinfo=dt.timezone.utc)
+    for t in (dt.datetime(2024, 3, 10), dt.datetime(2024, 11, 3))
+    for h in (1, 7, 9.5, 10.5, 16)
+]
+#: session-local text: the LA gap, the LA fold, and plain hours
+TZ_TEXTS = [
+    "2024-03-10 02:30:00", "2024-11-03 01:30:00", "2024-11-03 00:59:59",
+    "2024-03-09 20:00:00", "2024-03-10 10:00:00", "2024-11-02 23:00:00",
+    "2024-11-03 09:30:00",
+]
 SPECS = {
     "identity": [("k", "identity")],
-    "day": [("ts", "day")],
-    "bucket": [("n", "bucket[4]")],
+    "day": [("ts", "day"), ("tz", "day")],
+    "bucket": [("n", "bucket[4]"), ("tz", "bucket[3]")],
     "truncate": [("n", "truncate[10]"), ("k", "truncate[1]")],
 }
 
@@ -215,6 +309,7 @@ def _rows():
             None if i % 11 == 3 else LONGS[(i * 3) % len(LONGS)],
             None if i % 7 == 6 else DOUBLES[(i * 5) % len(DOUBLES)],
             None if i % 13 == 5 else TIMESTAMPS[(i * 7) % len(TIMESTAMPS)],
+            None if i % 8 == 1 else INSTANTS[(i * 3) % len(INSTANTS)],
         ))
     return out
 
@@ -243,6 +338,12 @@ def _predicates():
                 f"TIMESTAMP '{d:%Y-%m-%d %H:%M:%S}'",
                 f"TIMESTAMP_NTZ '{d:%Y-%m-%d %H:%M:%S}'",
                 f"'{d:%Y-%m-%d}'",
+            ])
+        ),
+        "tz": st.sampled_from(TZ_TEXTS).flatmap(
+            lambda s: st.sampled_from([
+                f"TIMESTAMP '{s}'", f"TIMESTAMP_NTZ '{s}'", f"'{s[:10]}'",
+                f"TIMESTAMP '{s}Z'",
             ])
         ),
     }
@@ -287,7 +388,9 @@ def _build(catalog, spark, name, spec):
 def _build_raw(catalog, spark, raw_dir):
     """The rows as four pyarrow-written files registered with add_files,
     grouped by ``v`` so NaN shares a file with -1.5 only: pyarrow leaves
-    NaN out of min/max, so that file's stats read [-1.5, -1.5]."""
+    NaN out of min/max, so that file's stats read [-1.5, -1.5]. Odd
+    files spell every column ``r<name>``, the mapping's second name;
+    ``tz`` is written UTC-adjusted, so its stats carry the zone."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -298,18 +401,19 @@ def _build_raw(catalog, spark, raw_dir):
     group = {-1.5: 0, -0.0: 1, 2.5: 2, 7.0: 2, math.inf: 3, None: 3}
     for i in range(4):
         rows = [r for r in _rows() if group.get(r[2], 0) == i]  # NaN → 0
+        types = (pa.string(), pa.int64(), pa.float64(), pa.timestamp("us"),
+                 pa.timestamp("us", tz="UTC"))
         pq.write_table(
             pa.table({
-                c: pa.array([r[j] for r in rows], ty)
-                for j, (c, ty) in enumerate(zip(
-                    ("k", "n", "v", "ts"),
-                    (pa.string(), pa.int64(), pa.float64(), pa.timestamp("us")),
-                ))
+                "r" * (i % 2) + c: pa.array([r[j] for r in rows], ty)
+                for j, (c, ty) in enumerate(zip(COLS, types))
             }),
             raw_dir / f"part-{i}.parquet",
         )
     fields = t.metadata.current_schema().fields
-    t.add_files(str(raw_dir), name_mapping=[NameMapping(f.id, (f.name,)) for f in fields])
+    t.add_files(
+        str(raw_dir), name_mapping=[NameMapping(f.id, (f.name, "r" + f.name)) for f in fields]
+    )
     return t
 
 
@@ -332,11 +436,11 @@ def diff_rows(spark, diff_tables):
     rows = []
     for name, t in diff_tables.items():
         paths = {e.path for e in t._current_entries(t.metadata)}
-        scan = t.scan().select(F.input_file_name().alias("f"), "k", "n", "v", "ts")
+        scan = t.scan().select(F.input_file_name().alias("f"), *COLS)
         for r in scan.collect():
             f = _strip_file_scheme(r.f)
             assert f in paths, f  # every row maps to a manifest entry
-            rows.append((name, f, r.k, r.n, r.v, r.ts))
+            rows.append((name, f, *r[1:]))
     df = spark.createDataFrame(rows, "t string, f string, " + SCHEMA).coalesce(1).cache()
     yield df
     df.unpersist()
@@ -352,12 +456,16 @@ def test_evaluator_mask_covers_actual_outcomes(spark, diff_tables, diff_rows):
     """Per file, the outcomes ``where`` takes on its rows must be a
     subset of `_file_outcomes`'s mask — in UTC and in a session zone
     with DST."""
-    from hypothesis import HealthCheck, given, settings
+    from hypothesis import HealthCheck, example, given, settings
     from hypothesis import strategies as st
 
     @settings(max_examples=60, deadline=None, derandomize=True,
               suppress_health_check=list(HealthCheck))
     @given(where=_predicates(), tz=st.sampled_from(["UTC", LA]))
+    # LA evening: a later UTC day; the DST gap; the DST fold
+    @example(where="tz < TIMESTAMP '2024-03-09 20:00:00'", tz=LA)
+    @example(where="tz = TIMESTAMP '2024-03-10 02:30:00'", tz=LA)
+    @example(where="tz <= TIMESTAMP '2024-11-03 01:30:00'", tz=LA)
     def check(where, tz):
         with session_tz(spark, tz):
             actual: dict[tuple, int] = {}
@@ -381,6 +489,8 @@ def test_evaluator_mask_covers_actual_outcomes(spark, diff_tables, diff_rows):
         ("(v > 5 OR v = double('NaN')) AND k IS NOT NULL", LA, "truncate"),
         ("ts >= TIMESTAMP '2024-03-10 00:00:00' AND n NOT IN (7, 12)", LA, "day"),
         ("NOT (k < 'b') OR ts IS NULL OR n = 25", "UTC", "bucket"),
+        ("tz = TIMESTAMP '2024-03-10 02:30:00' OR n = 7", LA, "bucket"),
+        ("tz < TIMESTAMP '2024-03-09 20:00:00' OR tz >= '2024-11-03 09:30'", LA, "day"),
     ],
 )
 def test_scan_and_delete_exactness(spark, diff_tables, tmp_path, where, tz, spec):
